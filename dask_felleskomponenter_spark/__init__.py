@@ -15,12 +15,6 @@ Design stance (SURVEY.md §7):
 """
 
 from dask_felleskomponenter_spark.session import get_spark
-from dask_felleskomponenter_spark.vendorshim import ensure_protobuf
-
-# Activate the vendored protobuf runtime (no-op when the real one is
-# installed) BEFORE any SparkSession exists, so Python workers inherit
-# the PYTHONPATH entry — see vendorshim.py.
-ensure_protobuf()
 
 __version__ = "0.1.0"
 

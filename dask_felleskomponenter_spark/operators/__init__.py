@@ -21,7 +21,6 @@ from dask_felleskomponenter_spark.operators.shuffle import (
 )
 from dask_felleskomponenter_spark.operators.similarity import (
     cosine_topk,
-    lsh_bucketed_cosine_topk,
     with_vector_norm,
 )
 
@@ -40,6 +39,5 @@ __all__ = [
     "ngram_jaccard_pairs",
     "pinned_repartition",
     "cosine_topk",
-    "lsh_bucketed_cosine_topk",
     "with_vector_norm",
 ]

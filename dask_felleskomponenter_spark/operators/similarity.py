@@ -468,6 +468,17 @@ def nearest_cell_col(
     return F.array_max(F.array(*scored))["cell"]
 
 
+def _exact_mean(x: Column) -> Column:
+    """Partition-invariant mean of unit-vector components (|x| <= 1).
+
+    A double ``avg`` adds partial sums in an order that follows the
+    input partitioning, so the same rows split differently give
+    centroids that differ in the last ulp. Summing a DECIMAL is exact,
+    hence order-free: 20 fractional digits keep each component to
+    1e-20, and the 18 integer digits hold sums over 1e18 rows."""
+    return F.avg(x.cast("decimal(38,20)")).cast("double")
+
+
 def build_ivf_centroids(
     emb_df: DataFrame,
     n_cells: int = 16,
@@ -478,8 +489,8 @@ def build_ivf_centroids(
     """Coarse-quantizer training for an IVF index: deterministic seeding
     (the ``n_cells`` lowest-id vectors) + ``iters`` distributed Lloyd
     steps (assignment is a JVM expression; the mean reduces via
-    posexplode → per-(cell, dim) avg, so only ``n_cells × dim`` numbers
-    ever reach the driver).
+    posexplode → per-(cell, dim) exact avg, so only ``n_cells × dim``
+    numbers ever reach the driver).
 
     This is an INDEX-BUILD step — it runs Spark jobs, like writing a
     bucketed table. Never call it inside a query path; persist the
@@ -547,7 +558,7 @@ def build_ivf_centroids(
                 F.col("_n"),
             )
             .groupBy("_cell", "_dim")
-            .agg(F.avg(F.col("_x") / F.col("_n")).alias("_m"))
+            .agg(_exact_mean(F.col("_x") / F.col("_n")).alias("_m"))
             .collect()
         )
         by_cell: dict[int, dict[int, float]] = {}
@@ -745,39 +756,6 @@ def query_bucket(query_vec: list[float], bits: int = 8, seed: int = 42) -> int:
         if sum(float(a) * float(p) for a, p in zip(query_vec, plane)) >= 0:
             b += 2**i
     return b
-
-
-def lsh_bucketed_cosine_topk(
-    emb_df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_col: str = "cosine",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: restrict the exact scan to the query's sign-LSH
-    bucket.
-
-    Convenience form over an *unbucketed* table — it attaches the bucket
-    column on the fly via ``with_lsh_bucket`` and filters it. The scale
-    path precomputes ``with_lsh_bucket`` once at write time and filters
-    the stored column (single-bucket partition-pruned read); this helper
-    exists so small/ad-hoc tables don't need the materialization step.
-    """
-    from dask_felleskomponenter_spark.operators.shuffle import fresh_name
-
-    # fresh-named: a caller column literally named "_lsh_bucket" (e.g.
-    # a precomputed bucket from a different bits/seed family) must not
-    # be silently clobbered and recomputed under this helper's family
-    bcol = fresh_name("_lsh_bucket", emb_df)
-    bucketed = with_lsh_bucket(
-        emb_df, len(query_vec), bits, vec_col, bcol, seed
-    )
-    q_bucket = query_bucket(query_vec, bits, seed)
-    in_bucket = bucketed.filter(F.col(bcol) == F.lit(q_bucket)).drop(bcol)
-    return cosine_topk(in_bucket, query_vec, k, id_col, vec_col, score_col)
 
 
 # ---------------------------------------------------------------------------
@@ -978,7 +956,7 @@ def build_pq_codebooks(
         means = (
             assign.select("_j", "_c", F.posexplode("_sv").alias("_i", "_x"))
             .groupBy("_j", "_c", "_i")
-            .agg(F.avg("_x").alias("_mu"))
+            .agg(_exact_mean(F.col("_x")).alias("_mu"))
             .collect()
         )
         new_cb = [[list(c) for c in cb] for cb in codebooks]

@@ -1,12 +1,10 @@
 """Structured Streaming pack: watermarked windows, sessionization,
-custom stateful operators (SURVEY.md §7 v2 stretch, realized)."""
+custom stateful sessionization (SURVEY.md §7 v2 stretch, realized)."""
 
 from dask_felleskomponenter_spark.streaming.ops import (
     EVENTS_SCHEMA,
     SESSION_SCHEMA,
-    category_profile_stateful,
     run_to_memory_sink,
-    running_totals_stateful,
     sessionize_events,
     sessionize_stateful,
     stream_dedup,
@@ -16,16 +14,13 @@ from dask_felleskomponenter_spark.streaming.ops import (
     stream_neardup_ingest,
     stream_static_dim_join,
     stream_to_jdbc_sync,
-    timer_probe_stateful,
     windowed_event_counts,
 )
 
 __all__ = [
     "EVENTS_SCHEMA",
     "SESSION_SCHEMA",
-    "category_profile_stateful",
     "run_to_memory_sink",
-    "running_totals_stateful",
     "sessionize_events",
     "sessionize_stateful",
     "stream_dedup",
@@ -35,6 +30,5 @@ __all__ = [
     "stream_neardup_ingest",
     "stream_static_dim_join",
     "stream_to_jdbc_sync",
-    "timer_probe_stateful",
     "windowed_event_counts",
 ]

@@ -523,345 +523,6 @@ def stream_static_dim_join(
     return stream_df.join(F.broadcast(dim_df), on=list(on), how=how)
 
 
-def _has_protobuf() -> bool:
-    """``transformWithStateInPandas`` serializes state via protobuf on
-    the Python workers. The vendored mini-runtime (``vendor/google/
-    protobuf``, activated by ``vendorshim.ensure_protobuf``) satisfies
-    the dependency when the real distribution is absent; this gate only
-    stays False if both are unavailable."""
-    from dask_felleskomponenter_spark.vendorshim import ensure_protobuf
-
-    if not ensure_protobuf():  # pragma: no cover - vendor dir always ships
-        return False
-    try:  # pragma: no cover - trivial
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-_HAS_TWS_CACHE: bool | None = None
-
-
-def _tws_available() -> bool:
-    """Lazily-cached protobuf probe: importing the streaming package for
-    its stateless operators must not pay the vendorshim path mutation
-    and protobuf import, and a protobuf installed later in the process
-    still flips the gate on first USE (an import-time constant froze
-    availability forever)."""
-    global _HAS_TWS_CACHE
-    if _HAS_TWS_CACHE is None:
-        _HAS_TWS_CACHE = _has_protobuf()
-    return _HAS_TWS_CACHE
-
-
-def __getattr__(name: str):
-    # PEP 562: `HAS_TWS` stays importable (tests and callers read it)
-    # while evaluating lazily on first access.
-    if name == "HAS_TWS":
-        return _tws_available()
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-
-
-def _col_dtype(df: DataFrame, col: str) -> str:
-    """Resolve a column's dtype the way Spark resolves the COLUMN —
-    case-insensitively under the default ``spark.sql.caseSensitive=
-    false``. A plain ``dict(df.dtypes)[col]`` raises a bare KeyError for
-    ``'USER_ID'`` against a ``user_id`` column that ``groupBy`` itself
-    accepts (the bug class ``lag_sessionize`` fixed; the TWS operators
-    reintroduced it)."""
-    dtypes = df.dtypes
-    for n, t in dtypes:
-        if n == col:
-            return t
-    # Mirror Spark's own resolution: when two columns differ only by
-    # case and neither matches exactly, Spark raises
-    # AMBIGUOUS_REFERENCE — silently returning the first match could
-    # hand back the WRONG column's dtype.
-    ci = [(n, t) for n, t in dtypes if n.lower() == col.lower()]
-    if len(ci) > 1:
-        raise ValueError(
-            f"ambiguous column reference {col!r}: matches "
-            f"{[n for n, _ in ci]} case-insensitively (mirroring "
-            f"Spark's AMBIGUOUS_REFERENCE)"
-        )
-    if ci:
-        return ci[0][1]
-    raise ValueError(
-        f"column {col!r} not found; have {[n for n, _ in dtypes]}"
-    )
-
-
-def _require_tws() -> None:
-    """Shared gate for the transformWithState operators: one message,
-    one place (three operators guard on it)."""
-    if not _tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package; "
-            "the vendored runtime (vendor/google/protobuf) normally "
-            "provides it even without an installed distribution — "
-            "sessionize_stateful (applyInPandasWithState) is the "
-            "protobuf-free custom-stateful fallback"
-        )
-
-
-def running_totals_stateful(
-    events: DataFrame,
-    value_col: str = "value",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Per-key running totals on Spark 4's ``transformWithState`` API —
-    the successor to ``applyInPandasWithState`` with named state
-    variables, TTL, and timers. Groups by ``key_col`` and emits the
-    updated (count, sum) for each key every micro-batch; the key's
-    column type is preserved in the output schema.
-
-    Requires the ``protobuf`` Python package at runtime (state
-    serialization); absent it, raises the documented
-    NotImplementedError — ``sessionize_stateful`` remains the
-    executable custom-stateful path in bare environments."""
-    _require_tws()
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n BIGINT, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    key_type = _col_dtype(events, key_col)
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=(
-            f"{key_col} {key_type}, n_events bigint, total_value double"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def category_profile_stateful(
-    events: DataFrame,
-    key_col: str = "user_id",
-    cat_col: str = "category",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key category profile on ``transformWithState`` exercising all
-    three named-state kinds in one processor:
-
-    - **MapState** ``per_cat``: category → (count, sum) — running
-      per-category aggregates updated point-wise;
-    - **ListState** ``recent``: the last values seen (bounded to 8 —
-      state stays O(1) per key regardless of stream length);
-    - **ValueState** ``total``: overall event count.
-
-    ``timeMode="None"`` deliberately: with ``ProcessingTime``,
-    ``TransformWithStateExec.shouldRunAnotherBatch`` is unconditionally
-    true, so an ``availableNow`` query never terminates — it keeps
-    scheduling empty micro-batches forever (measured: 260+ batches on a
-    32-file input). Timer-protocol coverage lives in
-    ``timer_probe_stateful``, which documents the required explicit
-    stop.
-
-    Emits one row per key per batch: total events, number of distinct
-    categories, sum over all categories, and the bounded recent-list
-    length. The final emission equals the batch aggregate (parity test).
-    """
-    _require_tws()
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    recent_cap = 8
-
-    class _CategoryProfile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._per_cat = handle.getMapState(
-                "per_cat", "category STRING", "n BIGINT, total DOUBLE"
-            )
-            self._recent = handle.getListState("recent", "v DOUBLE")
-            # "total" keeps its ORIGINAL 'n BIGINT' schema: widening it
-            # in place would fail the state-schema compatibility check
-            # on restart from any checkpoint written before the
-            # null-sum fix (or silently misread state where evolution
-            # is permissive). The null-category value sum lives under a
-            # NEW state name instead — missing on old checkpoints reads
-            # as 0.0, which matches what those checkpoints had counted.
-            self._total = handle.getValueState("total", "n BIGINT")
-            # value sum of NULL-category rows: a NULL category is NOT a
-            # category (batch countDistinct excludes it — and
-            # astype(str) used to mint literal 'None'/'nan' categories
-            # here), but its VALUE still counts toward the total sum
-            # (batch SUM(value) is category-blind).
-            self._null_sum = handle.getValueState("null_sum", "s DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n_total = self._total.get()[0] if self._total.exists() else 0
-            null_sum = (
-                self._null_sum.get()[0] if self._null_sum.exists() else 0.0
-            )
-            tail: list[tuple] = []
-            # Pre-aggregate per category IN PANDAS, then one state-server
-            # round-trip pair per TOUCHED CATEGORY: the per-row form was
-            # 3 RPCs × rows (1M rows → ~3M socket round-trips dominating
-            # batch latency); this is 2 RPCs × distinct categories.
-            local: dict[str, tuple[int, float]] = {}
-            for pdf in rows:
-                n_total += len(pdf)
-                cats = pdf[cat_col]
-                mask = cats.notna()
-                null_sum += float(pdf.loc[~mask, value_col].sum() or 0.0)
-                grouped = (
-                    pdf[mask]
-                    .groupby(cats[mask].astype(str))[value_col]
-                    .agg(["count", "sum"])
-                )
-                for cat, row in grouped.iterrows():
-                    c0, s0 = local.get(cat, (0, 0.0))
-                    local[cat] = (c0 + int(row["count"]), s0 + float(row["sum"]))
-                # Only the last recent_cap values can survive — slice
-                # BEFORE tupling. The per-row form allocated one tuple
-                # per input row just to throw all but 8 away: O(batch)
-                # memory per key in an operator advertising O(1) state.
-                tail.extend(
-                    (float(v),) for v in pdf[value_col].iloc[-recent_cap:]
-                )
-                del tail[:-recent_cap]
-            for cat, (c_new, s_new) in local.items():
-                cat_key = (cat,)
-                if self._per_cat.containsKey(cat_key):
-                    n, total = self._per_cat.getValue(cat_key)
-                else:
-                    n, total = 0, 0.0
-                self._per_cat.updateValue(cat_key, (n + c_new, total + s_new))
-            # Bounded recent list: keep only the newest `recent_cap`.
-            existing = list(self._recent.get()) if self._recent.exists() else []
-            merged = (existing + tail)[-recent_cap:]
-            self._recent.put(merged)
-            self._total.update((n_total,))
-            self._null_sum.update((null_sum,))
-            n_cats = 0
-            sum_all = null_sum
-            for _cat_key, (n, total) in self._per_cat.iterator():
-                n_cats += 1
-                sum_all += total
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_events": [n_total],
-                    "n_categories": [n_cats],
-                    "sum_value": [sum_all],
-                    "n_recent": [len(merged)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    key_type = _col_dtype(events, key_col)
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_CategoryProfile(),
-        outputStructType=(
-            f"{key_col} {key_type}, n_events bigint, n_categories bigint, "
-            f"sum_value double, n_recent bigint"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def timer_probe_stateful(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Timer-protocol conformance probe for ``transformWithState``:
-    per input batch each key registers a far-future processing-time
-    timer, lists it back from the state server, and deletes it — the
-    emitted row carries how many of its own timers the key observed
-    before and after, so the test asserts the full register → list →
-    delete round-trip succeeded JVM-side.
-
-    MUST be stopped explicitly (``query.stop()`` after the expected
-    rows appear): ``timeMode="ProcessingTime"`` makes
-    ``shouldRunAnotherBatch`` unconditionally true, so ``availableNow``
-    never self-terminates for this plan — that is Spark's contract for
-    processing-time timers, not a defect here.
-    """
-    _require_tws()
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _TimerProbe(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            # TTL'd value state: exercises the StateCallCommand.ttl
-            # protocol message against the JVM (the one-hour duration
-            # never expires within a test run, so output stays
-            # deterministic); also proves state and timers coexist.
-            self._seen = handle.getValueState(
-                "seen", "n BIGINT", ttlDurationMs=3_600_000
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            n = self._seen.get()[0] if self._seen.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._seen.update((n,))
-            probe = timer_values.getCurrentProcessingTimeInMs() + 10**11
-            self._handle.registerTimer(probe)
-            listed_after_register = sum(
-                1 for t in self._handle.listTimers() if t == probe
-            )
-            self._handle.deleteTimer(probe)
-            listed_after_delete = sum(
-                1 for t in self._handle.listTimers() if t == probe
-            )
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_rows": [n],
-                    "listed_after_register": [listed_after_register],
-                    "listed_after_delete": [listed_after_delete],
-                }
-            )
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            # Far-future timers never expire within a test run.
-            yield from ()
-
-        def close(self) -> None:
-            pass
-
-    key_type = _col_dtype(events, key_col)
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_TimerProbe(),
-        outputStructType=(
-            f"{key_col} {key_type}, n_rows bigint, "
-            f"listed_after_register bigint, listed_after_delete bigint"
-        ),
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )
-
-
 def stream_neardup_ingest(
     stream_df: DataFrame,
     id_col: str,

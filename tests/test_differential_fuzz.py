@@ -1396,207 +1396,6 @@ def test_fuzz_stream_interval_join_matches_batch(spark, tmp_path, seed):
     assert len(want) > 0
 
 
-def _rocksdb(spark):
-    from tests.test_streaming import rocksdb_state_store
-
-    return rocksdb_state_store(spark)
-
-
-def _tws_or_skip():
-    from dask_felleskomponenter_spark.streaming.ops import HAS_TWS
-
-    if not HAS_TWS:
-        pytest.skip("protobuf unavailable (vendored runtime missing)")
-
-
-@pytest.mark.parametrize("seed", [109, 229])
-def test_fuzz_tws_running_totals_matches_batch(spark, tmp_path, seed):
-    """transformWithState running totals on a random key/value stream ≡
-    the batch count/sum per key. Values are multiples of 0.25 so the
-    float sums compare exactly. Multiple micro-batch files force the
-    totals to accumulate across ValueState round-trips."""
-    from dask_felleskomponenter_spark.streaming.ops import (
-        running_totals_stateful,
-    )
-
-    _tws_or_skip()
-    rng = random.Random(seed)
-    n_users = rng.randrange(3, 9)
-    rows = [
-        (rng.randrange(n_users), float(rng.randrange(-200, 400)) * 0.25)
-        for _ in range(rng.randrange(150, 400))
-    ]
-    d = str(tmp_path / "data")
-    chunk = max(1, len(rows) // 4)
-    for i in range(0, len(rows), chunk):
-        spark.createDataFrame(
-            rows[i:i + chunk], "user_id long, value double"
-        ).coalesce(1).write.mode("append").parquet(d)
-    stream = (
-        spark.readStream.schema("user_id bigint, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    with _rocksdb(spark):
-        # results read from the memory sink by name below; _drain's
-        # return is unused here
-        _drain(
-            spark, running_totals_stateful(stream),
-            f"fz_tws_totals_{seed}", str(tmp_path / "ckpt"),
-        )
-        # the FINAL emission per user is the one with the highest
-        # n_events — max_by, not MAX(total_value): with negative values
-        # the running total is not monotone, so a per-batch max would
-        # compare an intermediate peak against the batch sum
-        got = {
-            r.user_id: (r.n_events, r.total_value)
-            for r in spark.sql(
-                f"SELECT user_id, MAX(n_events) AS n_events, "
-                f"MAX_BY(total_value, n_events) AS total_value "
-                f"FROM fz_tws_totals_{seed} GROUP BY user_id"
-            ).collect()
-        }
-    want = {
-        r.user_id: (r.n, r.s)
-        for r in spark.read.parquet(d)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert got == want, f"seed {seed}: {got} vs {want}"
-
-
-@pytest.mark.parametrize("seed", [113, 233])
-def test_fuzz_tws_category_profile_matches_batch(spark, tmp_path, seed):
-    """transformWithState value+list+map state on a random stream ≡
-    the batch per-key profile (count, distinct categories, sum), with
-    the recent-list capped at 8."""
-    from dask_felleskomponenter_spark.streaming.ops import (
-        category_profile_stateful,
-    )
-
-    _tws_or_skip()
-    rng = random.Random(seed)
-    n_users, n_cats = rng.randrange(3, 7), rng.randrange(2, 12)
-    rows = [
-        (
-            rng.randrange(n_users),
-            # ~8% NULL categories: NOT a category (batch countDistinct
-            # excludes NULL) but the value still counts toward the sum —
-            # astype(str) in the operator once minted literal 'None'
-            # categories here (round-7 review finding)
-            None if rng.random() < 0.08 else f"cat{rng.randrange(n_cats)}",
-            float(rng.randrange(0, 500)) * 0.25,
-        )
-        for _ in range(rng.randrange(120, 320))
-    ]
-    d = str(tmp_path / "data")
-    chunk = max(1, len(rows) // 3)
-    for i in range(0, len(rows), chunk):
-        spark.createDataFrame(
-            rows[i:i + chunk], "user_id long, category string, value double"
-        ).coalesce(1).write.mode("append").parquet(d)
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, category string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    with _rocksdb(spark):
-        # results read from the memory sink by name below; _drain's
-        # return is unused here
-        _drain(
-            spark, category_profile_stateful(stream),
-            f"fz_tws_prof_{seed}", str(tmp_path / "ckpt"),
-        )
-        got = {
-            r.user_id: (r.n_events, r.n_categories, r.sum_value, r.n_recent)
-            for r in spark.sql(
-                f"SELECT user_id, MAX(n_events) AS n_events, "
-                f"MAX_BY(n_categories, n_events) AS n_categories, "
-                f"MAX_BY(sum_value, n_events) AS sum_value, "
-                f"MAX_BY(n_recent, n_events) AS n_recent "
-                f"FROM fz_tws_prof_{seed} GROUP BY user_id"
-            ).collect()
-        }
-    want = {
-        r.user_id: (r.n, r.c, r.s)
-        for r in spark.read.parquet(d)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("category").alias("c"),
-            F.sum("value").alias("s"),
-        )
-        .collect()
-    }
-    assert set(got) == set(want), f"seed {seed}: key sets differ"
-    for u, (n, c, s) in want.items():
-        gn, gc, gs, gr = got[u]
-        assert (gn, gc) == (n, c), f"seed {seed} user {u}"
-        assert abs(gs - s) < 1e-6, f"seed {seed} user {u}"
-        assert gr == min(8, n), f"seed {seed} user {u}: recent-list cap"
-
-
-@pytest.mark.parametrize("seed", [127])
-def test_fuzz_tws_timer_probe_protocol(spark, tmp_path, seed):
-    """Timer register→list→delete protocol over a RANDOM number of keys
-    and rows: every key must report its exact row count, a listed
-    registered timer, and no listed timer after deletion. ProcessingTime
-    timeMode never self-terminates under availableNow, so poll and stop
-    explicitly (the operator's documented usage contract)."""
-    import time as _time
-
-    from dask_felleskomponenter_spark.streaming.ops import (
-        timer_probe_stateful,
-    )
-
-    _tws_or_skip()
-    rng = random.Random(seed)
-    n_keys = rng.randrange(2, 7)
-    per_key = rng.randrange(4, 15)
-    d = str(tmp_path / "data")
-    spark.createDataFrame(
-        [(i % n_keys, i) for i in range(n_keys * per_key)],
-        "user_id long, v long",
-    ).coalesce(2).write.parquet(d)
-    stream = spark.readStream.schema("user_id bigint, v bigint").parquet(d)
-    with _rocksdb(spark):
-        q = None
-        try:
-            q = (
-                timer_probe_stateful(stream)
-                .writeStream.format("memory")
-                .queryName(f"fz_tws_timer_{seed}")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", str(tmp_path / "ckpt"))
-                .start()
-            )
-            deadline = _time.time() + 120
-            rows = []
-            while _time.time() < deadline:
-                rows = spark.sql(
-                    f"SELECT user_id, MAX(n_rows) AS n_rows, "
-                    f"MIN(listed_after_register) AS n_reg, "
-                    f"MAX(listed_after_delete) AS n_del "
-                    f"FROM fz_tws_timer_{seed} GROUP BY user_id"
-                ).collect()
-                if len(rows) == n_keys and all(
-                    r.n_rows == per_key for r in rows
-                ):
-                    break
-                _time.sleep(1)
-        finally:
-            if q is not None:
-                q.stop()
-    assert len(rows) == n_keys, f"seed {seed}: {len(rows)} of {n_keys} keys"
-    for r in rows:
-        assert r.n_rows == per_key, f"seed {seed} user {r.user_id}"
-        assert r.n_reg == 1, f"seed {seed}: registered timer not listed"
-        assert r.n_del == 0, f"seed {seed}: deleted timer still listed"
-
-
 # --- emit-order parity ----------------------------------------------------
 #
 # The driver's value hash is ORDER-SENSITIVE: a query and its oracle must

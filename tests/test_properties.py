@@ -1428,30 +1428,6 @@ def test_rank_topn_rejects_colliding_rank_col(spark):
     assert out[0]["rn"] == 9 and out[0]["rank2"] == 1
 
 
-def test_streaming_col_dtype_is_case_insensitive(spark):
-    import pytest as _pytest
-    from pyspark.sql import Row
-
-    from dask_felleskomponenter_spark.streaming.ops import _col_dtype
-
-    df = spark.createDataFrame([Row(user_id=1, value=2.0)])
-    assert _col_dtype(df, "user_id") == "bigint"
-    assert _col_dtype(df, "USER_ID") == "bigint"  # groupBy accepts this
-    with _pytest.raises(ValueError, match="not found"):
-        _col_dtype(df, "nope")
-    # Round-9 finding (ADVICE): two columns differing only by case with
-    # no exact match must raise like Spark's AMBIGUOUS_REFERENCE, not
-    # silently return the first match's dtype.
-    amb = df.select(
-        F.col("user_id").alias("Key"),
-        F.col("value").alias("KEY"),
-    )
-    with _pytest.raises(ValueError, match="ambiguous"):
-        _col_dtype(amb, "key")
-    # an exact match still wins over the case-insensitive twin
-    assert _col_dtype(amb, "KEY") == "double"
-
-
 def test_salted_agg_dotted_output_name_matches_plain(spark):
     """Round-8 finding: the phase-2 merge referenced the partial alias
     by bare string, so an output name containing a dot parsed as a

@@ -5,8 +5,6 @@ semantics without a long-running cluster)."""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,22 +16,6 @@ from dask_felleskomponenter_spark.streaming import (
     stream_events,
     windowed_event_counts,
 )
-
-
-@contextmanager
-def rocksdb_state_store(spark):
-    """transformWithState requires the RocksDB state store provider
-    (the HDFS-backed default is rejected at query start). Scope the
-    override so a failure anywhere inside cannot leak it into the
-    session-scoped fixture and silently change unrelated tests."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 @pytest.fixture(scope="module")
@@ -524,182 +506,6 @@ def test_python_stream_source_is_deterministic_and_bounded(spark, tmp_path):
     assert first == second
     ids = [r[0] for r in first]
     assert ids == sorted(set(ids)), "doc_ids must be unique and dense-ordered"
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 transformWithState running totals; the final emission per
-    user must equal the batch count/sum. The protobuf dependency is
-    satisfied by the vendored mini wire runtime (vendor/google/protobuf)
-    when no real distribution exists — the JVM state server parsing our
-    request bytes and us parsing its responses IS the conformance test."""
-    import pytest as _pytest
-
-    from dask_felleskomponenter_spark.streaming.ops import (
-        HAS_TWS,
-        running_totals_stateful,
-    )
-
-    from pyspark.sql import functions as F
-
-    if not HAS_TWS:
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            running_totals_stateful(
-                spark.readStream.schema("user_id bigint, value double").parquet(
-                    str(tmp_path)
-                )
-            )
-        _pytest.skip("protobuf not installed; gate contract verified")
-
-    d = str(tmp_path / "data")
-    spark.range(100).select(
-        (F.col("id") % 5).alias("user_id"), (F.col("id") * 1.0).alias("value")
-    ).write.parquet(d)
-    stream = spark.readStream.schema("user_id bigint, value double").parquet(d)
-    with rocksdb_state_store(spark):
-        q = (
-            running_totals_stateful(stream)
-            .writeStream.format("memory")
-            .queryName("tws_totals")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination(180)
-    final = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql(
-            "SELECT user_id, MAX(n_events) AS n_events, MAX(total_value) AS total_value "
-            "FROM tws_totals GROUP BY user_id"
-        ).collect()
-    }
-    batch = {
-        r.user_id: (r.n, r.s)
-        for r in spark.read.parquet(d)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert final == batch
-
-
-def test_transform_with_state_category_profile(spark, tmp_path):
-    """All three named-state kinds (value/list/map) against the real JVM
-    state server; final per-key emission must equal the batch aggregate,
-    and the recent-list must stay bounded at its cap."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from dask_felleskomponenter_spark.streaming.ops import (
-        HAS_TWS,
-        category_profile_stateful,
-    )
-
-    if not HAS_TWS:
-        _pytest.skip("protobuf unavailable (vendored runtime missing)")
-
-    d = str(tmp_path / "data")
-    spark.range(200).select(
-        (F.col("id") % 4).alias("user_id"),
-        F.concat(F.lit("cat"), (F.col("id") % 7).cast("string")).alias("category"),
-        (F.col("id") * 0.5).alias("value"),
-    ).write.parquet(d)
-    stream = spark.readStream.schema(
-        "user_id bigint, category string, value double"
-    ).parquet(d)
-    with rocksdb_state_store(spark):
-        q = (
-            category_profile_stateful(stream)
-            .writeStream.format("memory")
-            .queryName("tws_profile")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination(180)
-    final = {
-        r.user_id: (r.n_events, r.n_categories, r.sum_value, r.n_recent)
-        for r in spark.sql(
-            "SELECT user_id, MAX(n_events) AS n_events, "
-            "MAX(n_categories) AS n_categories, MAX(sum_value) AS sum_value, "
-            "MAX(n_recent) AS n_recent FROM tws_profile GROUP BY user_id"
-        ).collect()
-    }
-    batch = {
-        r.user_id: (r.n, r.c, r.s, 8)
-        for r in spark.read.parquet(d)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("category").alias("c"),
-            F.sum("value").alias("s"),
-        )
-        .collect()
-    }
-    assert set(final) == set(batch)
-    for user_id, (n, c, s, cap) in batch.items():
-        fn, fc, fs, fr = final[user_id]
-        assert (fn, fc, fr) == (n, c, cap)
-        assert abs(fs - s) < 1e-6
-
-
-def test_transform_with_state_timer_protocol(spark, tmp_path):
-    """Timer register → list → delete round-trip against the JVM state
-    server. ProcessingTime timeMode means the query NEVER self-
-    terminates under availableNow (shouldRunAnotherBatch is
-    unconditionally true), so the test polls for the expected rows and
-    stops the query explicitly — the documented usage contract of
-    timer_probe_stateful."""
-    import time
-
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from dask_felleskomponenter_spark.streaming.ops import (
-        HAS_TWS,
-        timer_probe_stateful,
-    )
-
-    if not HAS_TWS:
-        _pytest.skip("protobuf unavailable (vendored runtime missing)")
-
-    d = str(tmp_path / "data")
-    spark.range(30).select(
-        (F.col("id") % 3).alias("user_id"), F.col("id").alias("v")
-    ).coalesce(2).write.parquet(d)
-    stream = spark.readStream.schema("user_id bigint, v bigint").parquet(d)
-    with rocksdb_state_store(spark):
-        q = None
-        try:
-            q = (
-                timer_probe_stateful(stream)
-                .writeStream.format("memory")
-                .queryName("tws_timers")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", str(tmp_path / "ckpt"))
-                .start()
-            )
-            deadline = time.time() + 120
-            rows = []
-            while time.time() < deadline:
-                rows = spark.sql(
-                    "SELECT user_id, MAX(n_rows) AS n_rows, "
-                    "MIN(listed_after_register) AS n_reg, "
-                    "MAX(listed_after_delete) AS n_del "
-                    "FROM tws_timers GROUP BY user_id"
-                ).collect()
-                if len(rows) == 3 and all(r.n_rows == 10 for r in rows):
-                    break
-                time.sleep(1)
-        finally:
-            if q is not None:
-                q.stop()
-    assert len(rows) == 3
-    for r in rows:
-        assert r.n_rows == 10
-        assert r.n_reg == 1, "registered timer must be listed by the server"
-        assert r.n_del == 0, "deleted timer must no longer be listed"
 
 
 def test_streaming_foreachbatch_maintains_incremental_summary(spark, tmp_path):
