@@ -8,6 +8,8 @@ import itertools
 import math
 import random
 
+import pytest
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -636,6 +638,42 @@ class TestElementNullVectors:
         got = {(r["id_a"], r["id_b"]) for r in
                cosine_neardup_pairs(df, threshold=0.9, n_blocks=2).collect()}
         assert got == {(1, 2)}
+
+
+class TestPartitionInvariantBuilds:
+    """The same rows split into any number of partitions must train the
+    bit-identical index: a double ``avg`` adds partial sums in an order
+    that follows the partitioning and moved centroids by an ulp."""
+
+    @staticmethod
+    def _df(spark, n=160, dim=8):
+        rnd = random.Random(11)
+        rows = [
+            (i, [rnd.uniform(-1.0, 1.0) for _ in range(dim)]) for i in range(n)
+        ]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    @pytest.mark.parametrize("n_parts", [2, 5, 8])
+    def test_ivf_centroids(self, spark, n_parts):
+        from dask_felleskomponenter_spark.operators.similarity import (
+            build_ivf_centroids,
+        )
+
+        df = self._df(spark)
+        want = build_ivf_centroids(df.coalesce(1), n_cells=3, iters=2)
+        got = build_ivf_centroids(df.repartition(n_parts), n_cells=3, iters=2)
+        assert got == want
+
+    @pytest.mark.parametrize("n_parts", [2, 5, 8])
+    def test_pq_codebooks(self, spark, n_parts):
+        from dask_felleskomponenter_spark.operators.similarity import (
+            build_pq_codebooks,
+        )
+
+        df = self._df(spark)
+        want = build_pq_codebooks(df.coalesce(1), dim=8, m=2, k=3, iters=2)
+        got = build_pq_codebooks(df.repartition(n_parts), dim=8, m=2, k=3, iters=2)
+        assert got == want
 
 
 class TestLshBitsValidation:
