@@ -402,17 +402,6 @@ PII_PHONE_PATTERN = r"\+?\d(?:-?\d){8,}"
 PII_PATTERNS = {"email": PII_EMAIL_PATTERN, "phone": PII_PHONE_PATTERN}
 
 
-def pii_hits(col: str | Column, kind: str) -> Column:
-    """Count of PII matches of ``kind`` (see ``PII_PATTERNS``) in a text
-    column. NULL text counts 0, matching the pack's counter convention
-    (``token_count``/``bpe_ish_token_count``) — a NULL-propagating count
-    would label NULL-text rows "dirty" in a ``hits == 0`` compliance
-    gate and silently drop them from ``avg(hits)`` denominators."""
-    return F.coalesce(
-        F.regexp_count(_c(col), F.lit(PII_PATTERNS[kind])), F.lit(0)
-    )
-
-
 def redact_pii(col: str | Column) -> Column:
     """All known PII kinds replaced with ``[KIND]`` tokens, one regex
     pass per kind, JVM-side."""

@@ -418,110 +418,3 @@ def grid_box_join(
     )
     return joined.filter(box).drop(cx_col, cy_col)
 
-
-def multikey_blocking_candidates(
-    df: DataFrame,
-    id_col: str,
-    key_cols: Sequence[str],
-    payload_cols: Sequence[str] = (),
-    max_block_size: int = 1000,
-) -> DataFrame:
-    """Candidate-pair generation for blocked entity resolution with
-    MULTIPLE redundant blocking keys and a per-block size guard.
-
-    Each row carries several cheap blocking keys (``key_cols``); a pair
-    is a candidate iff the two rows share at least one key whose block
-    (the set of rows carrying that key value) has at most
-    ``max_block_size`` members. Redundant keys are the standard ER
-    answer to hot blocks: when one key family degenerates (every English
-    document starts with "the"), its oversized blocks are *excluded*
-    rather than compared quadratically, and true matches still surface
-    through the other families (a length band, a minhash band). Result:
-    per-block work is capped at ``max_block_size²`` comparisons and no
-    single key value can turn the join quadratic.
-
-    Dataflow: union the per-key streams via one ``explode`` (no
-    shuffle), derive block sizes with a count window (one hash exchange
-    on the key), self-equi-join the guarded stream on the key (reuses
-    the same exchange), then ``distinct`` on the pair ids (one
-    pair-keyed exchange) so a pair sharing several keys is scored once.
-    Three shuffles total, all on bounded keys — contrast with a
-    single-key design where one hot key concentrates O(block²) rows in
-    one task.
-
-    Returns ``id_a < id_b`` pairs with the payload columns of both
-    sides as ``a_<col>`` / ``b_<col>``.
-    """
-    from pyspark.sql import Window as _W
-
-    from dask_felleskomponenter_spark.operators.shuffle import (
-        fresh_name,
-        pinned_repartition,
-        quoted_col,
-    )
-
-    # Helper names picked clear of the payload columns (same contract
-    # as every sibling operator): a payload column literally named
-    # "_bs" would otherwise be silently REPLACED by block sizes, and
-    # "_id"/"_k" payloads would duplicate in the tagged select.
-    taken = set(payload_cols) | {id_col}
-    id_h = fresh_name("_id", df, extra=taken)
-    k_h = fresh_name("_k", df, extra=taken | {id_h})
-    bs_h = fresh_name("_bs", df, extra=taken | {id_h, k_h})
-
-    # NULL and empty-string key values produce NULL entries and are
-    # dropped: concat_ws would silently collapse NULLs to the bare
-    # family prefix, and '' (the other common encoding of "unknown" in
-    # dirty data) is a shared value in the same way — either one makes
-    # "key unknown" one giant artifact block whose rows all pair with
-    # each other, at corpus scale usually the hottest block of the
-    # family.
-    # quoted_col throughout: a payload (or id) column legally named
-    # 'user.name' would otherwise parse as alias+struct path
-    tagged = df.select(
-        quoted_col(id_col).alias(id_h),
-        *[quoted_col(c).alias(c) for c in payload_cols],
-        F.explode(
-            F.array(
-                *[
-                    F.when(
-                        quoted_col(k).isNotNull()
-                        & (quoted_col(k).cast("string") != ""),
-                        F.concat_ws(
-                            ":", F.lit(f"k{i}"), quoted_col(k).cast("string")
-                        ),
-                    )
-                    for i, k in enumerate(key_cols)
-                ]
-            )
-        ).alias(k_h),
-    ).filter(F.col(k_h).isNotNull())
-    # pinned: the self-join's comparison fan-out, not the shuffled
-    # bytes, is the cost — keep AQE from coalescing it to one task
-    sized = pinned_repartition(tagged, k_h).withColumn(
-        bs_h, F.count(F.lit(1)).over(_W.partitionBy(k_h))
-    ).filter(F.col(bs_h) <= int(max_block_size))
-    a, b = sized.alias("a"), sized.alias("b")
-
-    def _side(tag: str, name: str):
-        # backtick the column part: a payload column legally named
-        # 'user.name' would otherwise parse as alias+struct path and
-        # raise UNRESOLVED_COLUMN (quoted_col's contract, which
-        # two_phase_salted_agg already follows)
-        return F.col(f"{tag}.`" + name.replace("`", "``") + "`")
-
-    pair = a.join(
-        b,
-        (_side("a", k_h) == _side("b", k_h))
-        & (_side("a", id_h) < _side("b", id_h)),
-    ).select(
-        _side("a", id_h).alias("id_a"),
-        _side("b", id_h).alias("id_b"),
-        *[_side("a", c).alias(f"a_{c}") for c in payload_cols],
-        *[_side("b", c).alias(f"b_{c}") for c in payload_cols],
-    )
-    # Dedup on the ID PAIR, not the full payload-carrying row: payloads
-    # are functionally determined by the ids, and pairs sharing several
-    # blocking keys would otherwise shuffle both full payloads 2-3x
-    # through the widest exchange of the operator.
-    return pair.dropDuplicates(["id_a", "id_b"])

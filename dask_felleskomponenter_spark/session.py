@@ -24,6 +24,41 @@ from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "dask-felleskomponenter-spark"
 
+# Runtime-settable engine defaults: ``get_spark`` builds them into a new
+# session and ``tune_session`` sets them on a session someone else
+# built. One list, so the two surfaces cannot drift.
+ENGINE_DEFAULTS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    # Read parquet naive timestamps as session-TZ TIMESTAMP (LTZ), not
+    # TIMESTAMP_NTZ: with the session pinned to UTC the wall-clock values
+    # are identical, but NTZ is rejected by unix_micros & friends and
+    # DuckDB oracles compare as naive-in-UTC either way.
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    # The test data's events.parquet carries TIMESTAMP(NANOS);
+    # without this, any read that doesn't go through load_table (which
+    # also sets it) fails with PARQUET_TYPE_ILLEGAL.
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # InferFiltersFromGenerate synthesizes `size(e) > 0 AND
+    # isnotnull(e)` under every non-outer explode/posexplode and
+    # pushes it through the projections — re-inlining the generator
+    # input expression into an interpreted Filter. For this
+    # engine's staged token/shingle arrays that meant the whole
+    # tokenizer re-ran ~14x per row before the real projection ran
+    # it once more (measured 3x on the inverted-index explode, the
+    # stage every dedup/similarity operator starts with). The
+    # rule's upside — pruning empty-array rows before the generate
+    # — is a row-count nicety this engine's exploders don't need;
+    # its downside scales with the generator expression, which is
+    # exactly what a 100 TB text pipeline makes expensive.
+    (
+        "spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    ),
+)
+
 
 def _env_flag(name: str, default: str = "false") -> str:
     """Normalize a truthy env var to the literal 'true'/'false' the JVM
@@ -111,42 +146,12 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
+    for key, value in ENGINE_DEFAULTS:
+        builder = builder.config(key, value)
     builder = (
         builder
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        # Read parquet naive timestamps as session-TZ TIMESTAMP (LTZ), not
-        # TIMESTAMP_NTZ: with the session pinned to UTC the wall-clock values
-        # are identical, but NTZ is rejected by unix_micros & friends and
-        # DuckDB oracles compare as naive-in-UTC either way.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Same nanos handling as tune_session: the driver testdata's
-        # events.parquet carries TIMESTAMP(NANOS), and a get_spark
-        # session must be able to read it directly — not only through
-        # load_table (which also sets this). The two engine-defaults
-        # surfaces must not drift.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # InferFiltersFromGenerate synthesizes `size(e) > 0 AND
-        # isnotnull(e)` under every non-outer explode/posexplode and
-        # pushes it through the projections — re-inlining the generator
-        # input expression into an interpreted Filter. For this
-        # engine's staged token/shingle arrays that meant the whole
-        # tokenizer re-ran ~14x per row before the real projection ran
-        # it once more (measured 3x on the inverted-index explode, the
-        # stage every dedup/similarity operator starts with). The
-        # rule's upside — pruning empty-array rows before the generate
-        # — is a row-count nicety this engine's exploders don't need;
-        # its downside scales with the generator expression, which is
-        # exactly what a 100 TB text pipeline makes expensive.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        )
         # normalize truthy env values — the JVM accepts only true/false
         .config("spark.ui.enabled", _env_flag("SPARK_UI_ENABLED"))
         .config("spark.driver.maxResultSize", "2g")
@@ -164,10 +169,8 @@ def get_spark(
         # applyInPandas stage measured 10-40s (vs 2s with fresh forks).
         # Linux fork via the pyspark daemon is cheap; measured no
         # regression on the non-UDF query set.
-        .config(
-            "spark.python.worker.reuse",
-            _env_flag("SPARK_GRAFT_PY_WORKER_REUSE"),
-        )
+        # A caller who wants reuse passes it through extra_conf.
+        .config("spark.python.worker.reuse", "false")
         # The context cleaner only reclaims shuffle files/broadcasts when
         # driver GC collects their weak refs; with a 16g heap that can be
         # never in a long session, so disk state accumulates across a
@@ -210,25 +213,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     timezone) are still settable per `SQLConf` semantics. Static confs are
     left alone.
     """
-    for key, value in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        # the driver's events.parquet carries TIMESTAMP(NANOS); without
-        # this, any read that doesn't go through load_table fails with
-        # PARQUET_TYPE_ILLEGAL (load_table also sets it, but a tuned
-        # session should not depend on load_table having run first)
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # see get_spark: the inferred pre-generate filter re-inlines
-        # expensive generator inputs (tokenizer ~14x per row)
-        (
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        ),
-    ):
+    for key, value in ENGINE_DEFAULTS:
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - static conf on some builds

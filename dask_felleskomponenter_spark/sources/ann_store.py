@@ -268,14 +268,11 @@ def build_ann_store(
     # 1g driver JVM a bare `SparkSession.builder.getOrCreate()` gives
     # (measured; the verification driver runs exactly such a session).
     # Interpreted eval of the same expressions is memory-flat and this
-    # is a one-time build step. Set SPARK_GRAFT_ANN_CODEGEN=on to keep
-    # codegen when the driver heap is sized (session.py's 16g default).
+    # is a one-time build step.
     pq_confs = {
         "spark.sql.codegen.wholeStage": "false",
         "spark.sql.codegen.factoryMode": "NO_CODEGEN",
     }
-    if os.environ.get("SPARK_GRAFT_ANN_CODEGEN", "").lower() == "on":
-        pq_confs = {}
     prev_confs = {k: spark.conf.get(k, None) for k in pq_confs}
     for k, val in pq_confs.items():
         spark.conf.set(k, val)

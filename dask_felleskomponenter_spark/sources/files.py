@@ -47,15 +47,12 @@ def _resolve_schema(
     return schema
 
 
-def _with_quarantine(reader, strict: bool, corrupt_col: bool = True):
+def _with_quarantine(reader, strict: bool):
     """One definition of the malformed-row policy (PERMISSIVE quarantine
-    vs FAILFAST) shared by the CSV/JSON/XML readers — triplicated
-    copies had already drifted (XML set columnNameOfCorruptRecord with
-    no schema, so no field existed to receive it)."""
-    reader = reader.option("mode", "FAILFAST" if strict else "PERMISSIVE")
-    if corrupt_col:
-        reader = reader.option("columnNameOfCorruptRecord", CORRUPT_COL)
-    return reader
+    vs FAILFAST) shared by the CSV/JSON readers."""
+    return reader.option(
+        "mode", "FAILFAST" if strict else "PERMISSIVE"
+    ).option("columnNameOfCorruptRecord", CORRUPT_COL)
 
 
 def read_csv(
@@ -136,187 +133,3 @@ def read_jdbc(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: StructType | dict[str, Any] | None = None,
-    strict: bool = False,
-    **options: str,
-) -> DataFrame:
-    """XML ingest via the Spark 4 built-in XML source — the remaining
-    classic interchange format next to CSV/JSON (Geonorge feeds and
-    ISO-19139 metadata are XML-first, which is why a Kartverket-shaped
-    component library needs it).
-
-    Same typing/quarantine policy as ``read_csv``/``read_json``: pass a
-    JSON Schema (compiled through Json2Spark) or a ``StructType`` for an
-    explicit read schema; default PERMISSIVE mode keeps corrupt records
-    in ``_corrupt_record`` instead of failing the job.
-    """
-    # the corrupt-record column only exists when an explicit schema
-    # (which _resolve_schema extends with it) is declared
-    reader = _with_quarantine(
-        spark.read.format("xml").option("rowTag", row_tag),
-        strict,
-        corrupt_col=schema is not None,
-    )
-    if schema is not None:
-        reader = reader.schema(_resolve_schema(schema, not strict))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = True,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Media ingest: the ``binaryFile`` source — one row per file with
-    (path, modificationTime, length, content) — the standard way raw
-    images/audio/video on object storage enter a multimodal pipeline
-    before the ``functions/multimodal`` decode operators.
-
-    Scale posture:
-    - ``glob`` (``pathGlobFilter``) prunes at FILE LISTING time — a
-      ``*.png`` filter never reads a byte of the non-matching files,
-      unlike a post-scan filter on ``path``.
-    - ``max_bytes`` guards the executors: object stores hold the odd
-      100 GB file, and ``binaryFile`` materializes whole files as single
-      row values; the filter is on the ``length`` metadata column, which
-      Spark prunes BEFORE loading content (content is lazily read
-      per-row).
-    - one file = one row = one task slot at minimum granularity; for
-      millions of small files, pack upstream (tar/parquet) — the source
-      never splits or merges files.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.filter(df["length"] <= int(max_bytes))
-    return df
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink — the columnar interchange format beside Parquet. Same
-    pushdown/pruning story (stripe-level min/max + bloom indexes); use
-    it when a downstream Hive/Trino estate standardizes on ORC."""
-    df.write.mode(mode).orc(path)
-
-
-def read_orc(
-    spark: SparkSession, path: str, schema: StructType | dict[str, Any] | None = None
-) -> DataFrame:
-    """ORC scan. Schema optional (ORC files embed one); when given (a
-    StructType or a JSON Schema dict, compiled via Json2Spark) it is
-    enforced instead of trusted-from-file, matching the CSV/JSON policy."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(_resolve_schema(schema, with_corrupt_col=False))
-    return reader.orc(path)
-
-
-def read_avro(
-    spark: SparkSession, path: str, schema: StructType | dict[str, Any] | None = None
-) -> DataFrame:
-    """Avro scan (row-oriented interchange). The ``spark-avro`` module is
-    external since Spark 2.4; environments without it (this sandbox) get
-    a clear error from the format lookup rather than an import crash —
-    call sites should treat Avro as an optional extra like GDAL."""
-    reader = spark.read.format("avro")
-    if schema is not None:
-        reader = reader.schema(_resolve_schema(schema, with_corrupt_col=False))
-    return reader.load(path)
-
-
-def read_parquet_evolved(
-    spark: SparkSession,
-    path: str,
-    target_schema: StructType | dict[str, Any],
-    extras: str = "ignore",
-) -> DataFrame:
-    """Schema-evolution-tolerant parquet read: batches written months
-    apart rarely share an identical schema (columns added and
-    dropped). Reads with ``mergeSchema`` and conforms the result to
-    ``target_schema`` (a StructType or a JSON Schema dict via
-    Json2Spark). Cross-file type conflicts (int32 vs int64 in different
-    files) are a mergeSchema error by Spark design — rewrite the old
-    batch; within one consistent on-disk type, the conforming cast
-    below still normalizes to the target (long → int, decimal scale):
-
-    - missing columns materialize as typed NULLs,
-    - present columns are cast to the target type,
-    - unknown extra columns are dropped (``extras='ignore'``) or kept
-      under an ``_extras`` struct (``extras='keep'``) for quarantine.
-
-    Scale: ``mergeSchema`` unions footer schemas at planning time (one
-    small metadata job); the conforming projection is codegen'd into
-    the scan, and column pruning still applies — only target (and
-    kept-extra) columns are read."""
-    if extras not in ("ignore", "keep"):
-        # validated BEFORE the mergeSchema read: that read is a real
-        # footer-union metadata job over every file, and a typo'd
-        # argument must fail in milliseconds, not after it
-        raise ValueError(f"extras must be 'ignore' or 'keep', got {extras!r}")
-    target_schema = _resolve_schema(target_schema, with_corrupt_col=False)
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    # Column matching follows the session's resolution mode: Spark
-    # resolves names case-INsensitively by default, so a file column
-    # 'userId' must satisfy a target field 'userid' instead of being
-    # silently replaced by typed NULLs (round-6 review finding).
-    case_sensitive = (
-        str(spark.conf.get("spark.sql.caseSensitive", "false")).lower()
-        == "true"
-    )
-
-    def _key(name: str) -> str:
-        return name if case_sensitive else name.lower()
-
-    present = {_key(f.name): f.name for f in df.schema.fields}
-    cols = []
-    from pyspark.sql import functions as F
-
-    def _q(name: str):
-        # backtick-quoted access: a literal dot in a file column name
-        # must resolve as the top-level column, not nested-field access
-        return df["`" + name.replace("`", "``") + "`"]
-
-    matched_file_cols = set()
-    for field in target_schema.fields:
-        actual = present.get(_key(field.name))
-        if actual is not None:
-            matched_file_cols.add(actual)
-            cols.append(_q(actual).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(
-                F.lit(None).cast(field.dataType).alias(field.name)
-            )
-    if extras == "keep":
-        unknown = sorted(
-            f.name
-            for f in df.schema.fields
-            if f.name not in matched_file_cols
-        )
-        if unknown:
-            # collision-proof the struct alias: a target field
-            # literally named '_extras' would otherwise duplicate in
-            # the output and every downstream reference raises
-            # AMBIGUOUS_REFERENCE
-            from dask_felleskomponenter_spark.operators.shuffle import (
-                fresh_name,
-            )
-
-            alias = fresh_name(
-                "_extras", extra={f.name for f in target_schema.fields}
-            )
-            cols.append(F.struct(*[_q(c) for c in unknown]).alias(alias))
-    return df.select(*cols)

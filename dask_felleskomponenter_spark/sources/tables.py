@@ -167,49 +167,6 @@ def write_sorted_shards(
     writer.parquet(path)
 
 
-def write_time_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str,
-    granularity: str = "day",
-    partition_col: str = "_pdate",
-    mode: str = "overwrite",
-) -> None:
-    """Persist a fact table partitioned by event-time — the standard
-    warehouse layout for append-mostly streams (one directory per day/
-    month), so every time-bounded query is a PARTITION-PRUNED scan that
-    never lists, let alone reads, out-of-range data.
-
-    The partition value is a derived DATE column (``date_trunc`` to
-    ``granularity``) kept alongside the original timestamp: partition
-    columns are stored in directory names, and truncating the original
-    in place would destroy sub-day precision. Readers filter on
-    ``partition_col`` (or on ``ts_col`` with a matching range — both
-    appear in PartitionFilters once the derived filter is added).
-    (``tests/test_plan_shapes.py`` pins the pruned scan.)
-    """
-    if granularity not in ("day", "month", "year"):
-        raise ValueError(f"unsupported granularity {granularity!r}")
-    # ensure_absent, not a hand-rolled `in df.columns`: withColumn
-    # resolves case-INSENSITIVELY under the default
-    # spark.sql.caseSensitive=false, so a user column '_PDATE' passed an
-    # exact-match check and was still silently REPLACED by the derived
-    # date (the same silent-overwrite class write_zordered was
-    # collision-proofed against). The partition column is an intentional
-    # output name here, so the fix is a loud error, not a fresh name.
-    from dask_felleskomponenter_spark.operators.shuffle import (
-        ensure_absent,
-        quoted_col,
-    )
-
-    ensure_absent(partition_col, df, what="partition_col")
-
-    out = df.withColumn(
-        partition_col, F.date_trunc(granularity, quoted_col(ts_col)).cast("date")
-    )
-    out.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None
 ) -> None:

@@ -12,8 +12,6 @@ from dask_felleskomponenter_spark.streaming.ops import (
     stream_events,
     stream_interval_join,
     stream_neardup_ingest,
-    stream_static_dim_join,
-    stream_to_jdbc_sync,
     windowed_event_counts,
 )
 
@@ -28,7 +26,5 @@ __all__ = [
     "stream_events",
     "stream_interval_join",
     "stream_neardup_ingest",
-    "stream_static_dim_join",
-    "stream_to_jdbc_sync",
     "windowed_event_counts",
 ]

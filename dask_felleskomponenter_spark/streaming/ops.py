@@ -434,95 +434,6 @@ def _has_aggregate_complete(df: DataFrame) -> bool:
     return has_aggregate
 
 
-def stream_to_jdbc_sync(
-    stream_df: DataFrame,
-    manager,
-    checkpoint_dir: str,
-    mode: str = "merge",
-    merge_keys: Iterable[str] | None = None,
-):
-    """Continuous publish: every micro-batch is staged over JDBC and
-    published by a ``PostgresSyncManager`` (``sync/postgres.py``) inside
-    ``foreachBatch`` — the streaming tail of the reference's sync
-    contract (its ``sync_df_to_pgdb`` is batch-only; this runs the same
-    staging-write + publish-SQL pair per trigger).
-
-    Default mode is **merge** (keyed upsert/delete): micro-batches are
-    increments, and merge accumulates them. ``mode="snapshot"`` is
-    TRUNCATE+load — it replaces the WHOLE target with the current batch,
-    so across a multi-batch run only the final batch's rows survive;
-    opt into it only when every trigger carries a complete snapshot
-    (e.g. a Kafka-compacted full-state topic), and the guard below
-    makes that opt-in explicit.
-
-    Delivery semantics: the checkpoint gives at-least-once batch
-    replay; both publish modes are idempotent re-applied (snapshot is
-    TRUNCATE+load, merge is keyed upsert/delete), so the visible effect
-    is effectively exactly-once PER BATCH. Connection fan-in per batch
-    is bounded by the manager's ``max_connections`` coalesce; no state
-    beyond the source offsets is held.
-
-    Returns the started ``StreamingQuery`` (``availableNow`` trigger) —
-    callers ``awaitTermination()`` it.
-    """
-    if mode == "snapshot" and not getattr(
-        manager, "allow_streaming_snapshot", False
-    ):
-        raise ValueError(
-            "mode='snapshot' TRUNCATEs the target every micro-batch — "
-            "across a multi-batch stream only the last batch survives. "
-            "Use mode='merge' (default), or set "
-            "manager.allow_streaming_snapshot = True if every trigger "
-            "really carries a complete snapshot"
-        )
-    keys = list(merge_keys) if merge_keys is not None else None
-    # Fail at CALL time, not inside foreachBatch on the first
-    # micro-batch: by then the query has started and the error surfaces
-    # as an opaque StreamingQueryException minutes later.
-    if mode not in ("merge", "snapshot"):
-        raise ValueError(
-            f"unknown mode {mode!r}: expected 'merge' or 'snapshot'"
-        )
-    if mode == "merge" and not keys:
-        raise ValueError(
-            "mode='merge' (the default) requires merge_keys — pass the "
-            "upsert key columns, or choose mode='snapshot' explicitly"
-        )
-
-    def _publish(batch_df: DataFrame, _batch_id: int) -> None:
-        manager.sync(batch_df, mode=mode, merge_keys=keys)
-
-    return (
-        stream_df.writeStream.foreachBatch(_publish)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_static_dim_join(
-    stream_df: DataFrame,
-    dim_df: DataFrame,
-    on: Iterable[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch joins the
-    dimension snapshot — the canonical "attach user/customer attributes
-    to an event stream" shape.
-
-    The static side is explicitly ``broadcast``: stream-static joins
-    re-evaluate the static plan each micro-batch, and without the hint a
-    large-enough dim silently becomes a per-batch shuffle of the stream
-    side. Stateless (no watermark needed): rows join against the dim as
-    of the batch that processes them. ``how`` inner/left only — right/
-    full would need the unmatched-dim side re-emitted per batch, which
-    stream-static joins cannot express (use a stream-stream join)."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"stream-static join supports inner/left, got {how!r}")
-    return stream_df.join(F.broadcast(dim_df), on=list(on), how=how)
-
-
 def stream_neardup_ingest(
     stream_df: DataFrame,
     id_col: str,

@@ -570,22 +570,3 @@ class TestRound10ReviewFindings:
             -60.0, 0.0, ["msg"],
         ).collect()
         assert len(out) == 1 and out[0]["rng_msg"] == "err"
-
-    def test_blocking_payload_with_dotted_name(self, spark):
-        """Payload columns legally named with a dot used to misparse as
-        alias+struct paths (UNRESOLVED_COLUMN)."""
-        from dask_felleskomponenter_spark.operators.joins import (
-            multikey_blocking_candidates,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "k", "x"), (2, "k", "y")],
-            ["id", "blk", "user.name"],
-        )
-        rows = multikey_blocking_candidates(
-            df, "id", ["blk"], payload_cols=["user.name"]
-        ).collect()
-        assert len(rows) == 1
-        r = rows[0]
-        assert (r["id_a"], r["id_b"]) == (1, 2)
-        assert (r["a_user.name"], r["b_user.name"]) == ("x", "y")

@@ -106,193 +106,6 @@ def test_read_jdbc_partition_column_requires_bounds():
         read_jdbc(MagicMock(), "jdbc:x", "t", partition_column="id")
 
 
-class TestBinaryFileSource:
-    """binaryFile ingest → multimodal decode, end-to-end on real PNG
-    files written to disk."""
-
-    def test_glob_prunes_and_decode_composes(self, spark, tmp_path):
-        from dask_felleskomponenter_spark.functions.multimodal import (
-            decode_image_png,
-            image_pixel_stats,
-            png_encode,
-        )
-        from dask_felleskomponenter_spark.sources.files import read_binary_files
-
-        media = tmp_path / "media"
-        (media / "sub").mkdir(parents=True)
-        for i, w in enumerate((3, 5)):
-            payload = bytes((x + y + c) & 0xFF for y in range(4) for x in range(w) for c in range(3))
-            (media / "sub" / f"img{i}.png").write_bytes(png_encode(w, 4, 3, payload))
-        (media / "sub" / "notes.txt").write_bytes(b"not an image")
-
-        df = read_binary_files(spark, str(media), glob="*.png")
-        assert df.count() == 2  # the txt never enters the scan
-        stats = image_pixel_stats(df, "content", decoder=decode_image_png)
-        got = {
-            r["path"].rsplit("/", 1)[-1]: r["pixel_stats"]["width"]
-            for r in stats.collect()
-        }
-        assert got == {"img0.png": 3, "img1.png": 5}
-
-    def test_max_bytes_guard(self, spark, tmp_path):
-        from dask_felleskomponenter_spark.sources.files import read_binary_files
-
-        (tmp_path / "small.bin").write_bytes(b"x" * 10)
-        (tmp_path / "large.bin").write_bytes(b"x" * 10_000)
-        df = read_binary_files(spark, str(tmp_path), glob="*.bin", max_bytes=100)
-        rows = df.select("path", "length").collect()
-        assert len(rows) == 1 and rows[0]["length"] == 10
-
-
-class TestXmlSource:
-    def test_typed_read_with_json_schema(self, spark, tmp_path):
-        from dask_felleskomponenter_spark.sources.files import read_xml
-
-        (tmp_path / "feed.xml").write_text(
-            "<feed>"
-            "<entry><id>1</id><title>first</title><score>0.5</score></entry>"
-            "<entry><id>2</id><title>second</title><score>1.5</score></entry>"
-            "</feed>"
-        )
-        schema = {
-            "type": "object",
-            "properties": {
-                "id": {"type": "integer"},
-                "title": {"type": "string"},
-                "score": {"type": "number"},
-            },
-            "required": ["id"],
-        }
-        df = read_xml(spark, str(tmp_path), row_tag="entry", schema=schema)
-        rows = {r["id"]: (r["title"], r["score"]) for r in df.collect()}
-        assert rows == {1: ("first", 0.5), 2: ("second", 1.5)}
-        assert dict(df.dtypes)["id"] == "bigint"
-
-    def test_corrupt_rows_quarantined(self, spark, tmp_path):
-        from dask_felleskomponenter_spark.sources.files import (
-            CORRUPT_COL,
-            read_xml,
-        )
-
-        (tmp_path / "bad.xml").write_text(
-            "<feed>"
-            "<entry><id>1</id></entry>"
-            "<entry><id>not-a-number</id></entry>"
-            "</feed>"
-        )
-        schema = {
-            "type": "object",
-            "properties": {"id": {"type": "integer"}},
-            "required": ["id"],
-        }
-        df = read_xml(spark, str(tmp_path), row_tag="entry", schema=schema)
-        rows = df.collect()
-        assert len(rows) == 2
-        bad = [r for r in rows if r[CORRUPT_COL] is not None]
-        assert len(bad) == 1 and bad[0]["id"] is None
-
-
-class TestSyntheticDataSource:
-    """Custom Python DataSource: partition-parallel deterministic corpus."""
-
-    def test_deterministic_and_partitioned(self, spark):
-        from dask_felleskomponenter_spark.sources.synthetic import (
-            register_synthetic_sources,
-        )
-
-        register_synthetic_sources(spark)
-
-        def load():
-            return (
-                spark.read.format("synthetic_documents")
-                .option("n_partitions", 3)
-                .option("rows_per_partition", 40)
-                .option("seed", 7)
-                .load()
-            )
-
-        a = load()
-        assert a.count() == 120
-        assert a.rdd.getNumPartitions() == 3
-        assert dict(a.dtypes) == {
-            "doc_id": "bigint", "lang": "string", "text": "string"
-        }
-        rows_a = sorted(tuple(r) for r in a.collect())
-        rows_b = sorted(tuple(r) for r in load().collect())
-        assert rows_a == rows_b  # same seed -> identical corpus
-        ids = [r[0] for r in rows_a]
-        assert ids == list(range(120))  # dense, partition-offset ids
-
-        different = (
-            spark.read.format("synthetic_documents")
-            .option("n_partitions", 3)
-            .option("rows_per_partition", 40)
-            .option("seed", 8)
-            .load()
-        )
-        assert sorted(tuple(r) for r in different.collect()) != rows_a
-
-    def test_composes_with_text_operators(self, spark):
-        from pyspark.sql import functions as F
-
-        from dask_felleskomponenter_spark.functions import text as TX
-        from dask_felleskomponenter_spark.sources.synthetic import (
-            register_synthetic_sources,
-        )
-
-        register_synthetic_sources(spark)
-        df = (
-            spark.read.format("synthetic_documents")
-            .option("n_partitions", 2)
-            .option("rows_per_partition", 25)
-            .load()
-        )
-        out = df.select("doc_id", TX.quality_score("text").alias("q")).collect()
-        assert len(out) == 50 and all(0.0 <= r["q"] <= 1.0 for r in out)
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    # ORC write → read roundtrip, schema enforced via the Json2Spark
-    # path, and a filter that reaches the ORC scan as a pushed predicate
-    from pyspark.sql import functions as F
-
-    from dask_felleskomponenter_spark.sources.files import read_orc, write_orc
-
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 7).alias("grp"), (F.col("id") * 1.5).alias("x")
-    )
-    path = str(tmp_path / "orc_tbl")
-    write_orc(df, path)
-    back = read_orc(spark, path)
-    assert back.count() == 1000
-    assert {f.name for f in back.schema.fields} == {"id", "grp", "x"}
-
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        back.filter(F.col("grp") == 3).select("id").explain("formatted")
-    plan = buf.getvalue()
-    assert "PushedFilters" in plan and "grp" in plan
-
-
-def test_avro_is_a_gated_extra(spark, tmp_path):
-    # without the external spark-avro module the reader must fail with
-    # the format-lookup error, not an import crash
-    import pytest as _pytest
-
-    from dask_felleskomponenter_spark.sources.files import read_avro
-
-    try:
-        df = read_avro(spark, str(tmp_path / "nope"))
-        df.count()
-    except Exception as ex:  # noqa: BLE001 - asserting the error class text
-        assert "avro" in str(ex).lower()
-    else:
-        _pytest.skip("spark-avro present in this environment")
-
-
 def test_sorted_shards_layout(spark, tmp_path):
     # dataloader export contract: files respect the row cap, rows within
     # every file are sorted, and shard ranges do not interleave
@@ -568,179 +381,12 @@ def test_compact_parquet_preserves_hive_partitioning(spark, tmp_path):
     assert "PartitionFilters: [" in plan and "day" in plan
 
 
-def test_parquet_schema_evolution_read(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dask_felleskomponenter_spark.sources.files import read_parquet_evolved
-
-    path = str(tmp_path / "evolving")
-    # batch 1: (id, name) — old layout without the score column
-    spark.range(5).select(
-        "id", F.lit("old").alias("name")
-    ).write.parquet(path)
-    # batch 2: (id, name, score, legacy_debug) — added columns
-    spark.range(5, 10).select(
-        "id", F.lit("new").alias("name"), F.lit(1.5).alias("score"),
-        F.lit("junk").alias("legacy_debug"),
-    ).write.mode("append").parquet(path)
-
-    target = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    out = read_parquet_evolved(spark, path, target)
-    assert [f.name for f in out.schema.fields] == ["id", "name", "score"]
-    assert dict(out.dtypes)["id"] == "bigint"
-    rows = {r.id: (r.name, r.score) for r in out.collect()}
-    assert rows[0] == ("old", None)  # missing column -> typed NULL
-    assert rows[7] == ("new", 1.5)
-    assert len(rows) == 10
-
-    kept = read_parquet_evolved(spark, path, target, extras="keep")
-    assert "_extras" in kept.columns
-    legacy = {r.id: r._extras.legacy_debug for r in kept.collect()}
-    assert legacy[7] == "junk" and legacy[0] is None
-
-
-def test_parquet_schema_evolution_is_case_insensitive_by_default(spark, tmp_path):
-    """Spark resolves columns case-insensitively unless
-    spark.sql.caseSensitive is on; the evolved read must match the same
-    way — a file column 'userId' satisfies a target field 'userid'
-    instead of being silently nulled out (round-6 review finding)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from dask_felleskomponenter_spark.sources.files import read_parquet_evolved
-
-    path = str(tmp_path / "cased")
-    spark.range(4).select(F.col("id").alias("userId")).write.parquet(path)
-    target = StructType([StructField("userid", LongType())])
-    out = read_parquet_evolved(spark, path, target)
-    assert out.columns == ["userid"]
-    assert sorted(r.userid for r in out.collect()) == [0, 1, 2, 3]
-    # a matched-but-differently-cased column is NOT an extra
-    kept = read_parquet_evolved(spark, path, target, extras="keep")
-    assert "_extras" not in kept.columns
-
-
-def test_synthetic_batch_and_stream_rows_agree(spark, tmp_path):
-    """Regression: the batch reader drew lang AFTER the text words while
-    the stream reader drew it BEFORE from the same-seeded RNG, so the
-    'micro-batch twin' produced different rows for identical keys."""
-    from dask_felleskomponenter_spark.sources.synthetic import (
-        register_synthetic_sources,
-    )
-
-    register_synthetic_sources(spark)
-    batch = (
-        spark.read.format("synthetic_documents")
-        .option("n_partitions", 2)
-        .option("rows_per_partition", 5)
-        .option("seed", 7)
-        .load()
-    )
-    stream = (
-        spark.readStream.format("synthetic_documents")
-        .option("n_partitions", 2)
-        .option("rows_per_partition", 5)
-        .option("seed", 7)
-        .option("max_batches", 1)
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("synth_twin")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    b = {tuple(r) for r in batch.collect()}
-    s = {tuple(r) for r in spark.table("synth_twin").collect()}
-    assert b == s
-
-
-def test_read_parquet_evolved_validates_extras_before_reading(spark):
-    """A typo'd extras= must fail in milliseconds at function entry —
-    the old post-loop validation first paid the mergeSchema footer-
-    union job over every file (round-7 review finding). Proven by
-    passing a NONEXISTENT path: entry-time validation raises ValueError
-    before any read could fail on the path."""
-    import pytest as _pytest
-
-    from dask_felleskomponenter_spark.sources.files import (
-        read_parquet_evolved,
-    )
-
-    with _pytest.raises(ValueError, match="extras"):
-        read_parquet_evolved(
-            spark, "/nonexistent/nowhere", "id bigint", extras="KEEP"
-        )
-
-
-def test_read_parquet_evolved_handles_dotted_file_columns(spark, tmp_path):
-    """File columns with literal dots must be carried into _extras (and
-    matched) via quoted access, not parsed as nested-field refs."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from dask_felleskomponenter_spark.sources.files import (
-        read_parquet_evolved,
-    )
-
-    path = str(tmp_path / "dotted_evo")
-    spark.createDataFrame(
-        [(1, 2.5)], ["id", "geo.lat"]
-    ).write.parquet(path)
-    target = StructType([StructField("id", LongType())])
-    kept = read_parquet_evolved(spark, path, target, extras="keep")
-    row = kept.first()
-    assert row["id"] == 1
-    assert row["_extras"]["geo.lat"] == 2.5
-
-
 def test_load_tables_empty_subset_loads_nothing(spark):
     """An explicit empty names tuple is 'none', not 'all' (falsy-
     container class)."""
     from dask_felleskomponenter_spark.sources.tables import load_tables
 
     assert load_tables(spark, "/root/testdata/sf0.001", names=()) == {}
-
-
-def test_write_time_partitioned_rejects_colliding_partition_col(spark, tmp_path):
-    """withColumn would silently replace a same-named user column in
-    the written dataset — loud error instead."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from dask_felleskomponenter_spark.sources.tables import (
-        write_time_partitioned,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", "user-data")],
-        "id long, ts string, _pdate string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    with _pytest.raises(ValueError, match="collides"):
-        write_time_partitioned(df, str(tmp_path / "o"), "ts")
-    # CASE-variant collision too: withColumn resolves case-insensitively
-    # under the default spark.sql.caseSensitive=false, so an exact-match
-    # guard let '_PDATE' be silently replaced (round-10 review)
-    df2 = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", "user-data")],
-        "id long, ts string, _PDATE string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    with _pytest.raises(ValueError, match="collides"):
-        write_time_partitioned(df2, str(tmp_path / "o"), "ts")
 
 
 def test_zorder_key_rejects_nonpositive_bits(spark):

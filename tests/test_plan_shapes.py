@@ -471,38 +471,6 @@ def test_multiway_star_joins_broadcast_all_dims(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_time_partitioned_write_prunes_scan(spark, tmp_path):
-    # a date-bounded read of a time-partitioned fact table must prune at
-    # the PARTITION level (directory pruning), not post-scan filter
-    import io
-    import re as _re
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from dask_felleskomponenter_spark.sources import load_table
-    from dask_felleskomponenter_spark.sources.tables import (
-        write_time_partitioned,
-    )
-
-    ev = load_table(spark, SF, "events")
-    path = str(tmp_path / "events_by_day")
-    write_time_partitioned(ev, path, "ts", granularity="day")
-
-    got = spark.read.parquet(path).filter(
-        F.col("_pdate") == "2024-01-05"
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        got.explain("formatted")
-    plan = buf.getvalue()
-    m = _re.search(r"PartitionFilters: \[([^\]]*_pdate[^\]]*)\]", plan)
-    assert m, plan[:2500]
-    # and the pruned read returns exactly the matching rows
-    want = ev.filter(F.to_date("ts") == "2024-01-05").count()
-    assert got.count() == want and want > 0
-
-
 def test_runtime_bloom_filter_prunes_fact_side(spark):
     # At 100 TB the cheapest row is the one the shuffle never carries:
     # when a selective dim filter exists, Spark's InjectRuntimeFilter

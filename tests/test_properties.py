@@ -823,52 +823,6 @@ def test_salted_agg_matches_plain_groupby_on_skew(spark):
         two_phase_salted_agg(df, ["k"], {"bad": ("avg", "v")})
 
 
-def test_multikey_blocking_hot_block_bounded_and_recall_via_redundancy(spark):
-    """The per-block size guard must exclude an oversized block from its
-    own family WITHOUT losing pairs that a redundant key family still
-    covers, and the candidate count must stay bounded (no hidden
-    quadratic) when one key value goes hot."""
-    from pyspark.sql import functions as F
-
-    from dask_felleskomponenter_spark.operators.joins import (
-        multikey_blocking_candidates,
-    )
-
-    # 600 rows share one hot primary key; their secondary key fans them
-    # out into 60 blocks of 10. 40 more rows are fully distinct.
-    rows = [(i, "hot", f"sub{i % 60}") for i in range(600)]
-    rows += [(1000 + i, f"cold{i}", f"csub{i}") for i in range(40)]
-    df = spark.createDataFrame(rows, "id long, k1 string, k2 string")
-
-    cands = multikey_blocking_candidates(
-        df, id_col="id", key_cols=["k1", "k2"], max_block_size=100
-    )
-    n = cands.count()
-    # primary family is over-cap (600 > 100) → contributes nothing;
-    # secondary blocks of 10 contribute C(10,2) pairs each
-    assert n == 60 * 45, n
-    # sanity: without the guard the hot block alone is C(600,2) pairs
-    uncapped = multikey_blocking_candidates(
-        df, id_col="id", key_cols=["k1", "k2"], max_block_size=10**9
-    ).count()
-    assert uncapped == 600 * 599 // 2
-
-    # redundancy recall: a pair split across two families survives the
-    # other family's guard
-    df2 = spark.createDataFrame(
-        [(1, "hot", "a"), (2, "hot", "a"), (3, "hot", "b")],
-        "id long, k1 string, k2 string",
-    )
-    got = {
-        (r.id_a, r.id_b)
-        for r in multikey_blocking_candidates(
-            df2, id_col="id", key_cols=["k1", "k2"], max_block_size=2
-        ).collect()
-    }
-    # k1 block 'hot' is size 3 > 2 → guarded out; (1,2) survives via k2
-    assert got == {(1, 2)}
-
-
 def test_fuzzy_blocked_match_finds_cross_token_near_duplicates(spark, tmp_path):
     """The minhash-band family must surface near-identical prefixes that
     single first-token blocking can never pair (different first word)."""
@@ -945,28 +899,6 @@ def test_fuzzy_blocked_match_escalates_hot_first_token_block(
     }
     assert got == want  # all within-group pairs, nothing cross-group
     assert all(r.distance == 1 for r in rows)
-
-
-def test_multikey_blocking_null_keys_never_pair(spark):
-    """Regression: rows whose only common trait is a NULL key value must
-    NOT become candidates — concat_ws used to collapse NULLs into one
-    shared 'key unknown' block per family."""
-    from dask_felleskomponenter_spark.operators.joins import (
-        multikey_blocking_candidates,
-    )
-
-    df = spark.createDataFrame(
-        [(1, None, "x"), (2, None, "y"), (3, "k", None), (4, "k", None)],
-        "id long, k1 string, k2 string",
-    )
-    got = {
-        (r.id_a, r.id_b)
-        for r in multikey_blocking_candidates(
-            df, id_col="id", key_cols=["k1", "k2"], max_block_size=100
-        ).collect()
-    }
-    # only (3,4) share an actual value ('k'); the NULL rows share nothing
-    assert got == {(3, 4)}
 
 
 def test_canonicalize_text_matches_duckdb_chain(spark, duck):
@@ -1236,33 +1168,6 @@ def test_prefixed_output_collisions_fail_loudly(spark):
         stream_interval_join(s_left, s_right, on=["k"])
 
 
-def test_multikey_blocking_preserves_reserved_payload_names(spark):
-    """Round-7 review finding: payload columns named _bs/_k/_id used to
-    be silently overwritten (block sizes returned as user data) or to
-    duplicate in the tagged select — helper names are now fresh."""
-    from pyspark.sql import Row
-
-    from dask_felleskomponenter_spark.operators.joins import (
-        multikey_blocking_candidates,
-    )
-
-    df = spark.createDataFrame(
-        [
-            Row(doc=1, key="a", _bs="keep1", _k="k1", _id="i1"),
-            Row(doc=2, key="a", _bs="keep2", _k="k2", _id="i2"),
-        ]
-    )
-    pairs = multikey_blocking_candidates(
-        df, id_col="doc", key_cols=["key"], payload_cols=["_bs", "_k", "_id"]
-    ).collect()
-    assert len(pairs) == 1
-    r = pairs[0]
-    assert (r["id_a"], r["id_b"]) == (1, 2)
-    assert (r["a__bs"], r["b__bs"]) == ("keep1", "keep2")
-    assert (r["a__k"], r["b__k"]) == ("k1", "k2")
-    assert (r["a__id"], r["b__id"]) == ("i1", "i2")
-
-
 class TestRound8ShuffleAndIngestFindings:
     def test_fresh_name_is_case_insensitive(self, spark):
         """Spark's default caseSensitive=false resolves _SALT against a
@@ -1291,54 +1196,6 @@ class TestRound8ShuffleAndIngestFindings:
         )
         with _pytest.raises(ValueError, match="hashable"):
             deterministic_row_salt(df, 16)
-
-    def test_pii_scan_survives_dotted_column(self, spark):
-        """A governance gate must not abort on a legal dotted column
-        name (quoted_col class)."""
-        from dask_felleskomponenter_spark.governance.data_checks import (
-            scan_text_pii,
-        )
-
-        df = spark.createDataFrame(
-            [("mail me at a@b.no",), ("clean",)], ["user.contact"]
-        )
-        findings = scan_text_pii(df, ["user.contact"], table="s.t")
-        assert any(f.column == "user.contact" for f in findings)
-
-    def test_pii_remedy_doubles_backticks(self, spark):
-        from dask_felleskomponenter_spark.governance.data_checks import (
-            scan_text_pii,
-        )
-
-        df = spark.createDataFrame([("a@b.no",)], ["we`ird"])
-        findings = scan_text_pii(df, ["we`ird"], table="s.t")
-        assert findings and "`we``ird`" in findings[0].solution
-
-    def test_evolved_reader_extras_alias_collision_proof(self, spark, tmp_path):
-        """A target field literally named _extras must not duplicate in
-        the output (AMBIGUOUS_REFERENCE downstream)."""
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        from dask_felleskomponenter_spark.sources.files import (
-            read_parquet_evolved,
-        )
-
-        p = str(tmp_path / "d")
-        spark.createDataFrame(
-            [(1, "keep", "extra-val")], ["id", "_extras", "surprise"]
-        ).write.parquet(p)
-        target = StructType(
-            [StructField("id", LongType()), StructField("_extras", StringType())]
-        )
-        out = read_parquet_evolved(spark, p, target, extras="keep")
-        assert len(out.columns) == len(set(out.columns)), out.columns
-        row = out.collect()[0]
-        assert row["_extras"] == "keep"
 
 
 def test_prefix_collision_is_case_insensitive(spark):

@@ -125,33 +125,6 @@ def test_output_mode_heuristic_not_spoofed_by_names(spark, events_dir):
     assert _has_aggregate_complete(spoof_proj) is False
 
 
-def test_stream_to_jdbc_sync_merge_requires_keys_at_call_time(
-    spark, events_dir, tmp_path
-):
-    """mode='merge' without merge_keys must fail BEFORE the query
-    starts — not minutes later as an opaque StreamingQueryException
-    from the first micro-batch inside foreachBatch."""
-    from dask_felleskomponenter_spark.streaming.ops import stream_to_jdbc_sync
-
-    ev = stream_events(spark, events_dir)
-    with pytest.raises(ValueError, match="merge_keys"):
-        stream_to_jdbc_sync(ev, object(), str(tmp_path / "ckpt"))
-
-
-def test_stream_to_jdbc_sync_rejects_unknown_mode_at_call_time(
-    spark, events_dir, tmp_path
-):
-    """A typo'd mode must fail at call time too — inside foreachBatch it
-    would only surface on the first micro-batch."""
-    from dask_felleskomponenter_spark.streaming.ops import stream_to_jdbc_sync
-
-    ev = stream_events(spark, events_dir)
-    with pytest.raises(ValueError, match="unknown mode"):
-        stream_to_jdbc_sync(
-            ev, object(), str(tmp_path / "ckpt"), mode="upsert"
-        )
-
-
 def test_stateful_sessionizer_matches_batch_gap_split(spark, events_dir, tmp_path):
     stream = sessionize_stateful(stream_events(spark, events_dir), gap_minutes=30)
     got = run_to_memory_sink(stream, "sessions_stateful", str(tmp_path / "ckpt"))
@@ -254,137 +227,6 @@ def test_stream_interval_join_matches_batch_operator(spark, events_dir, tmp_path
     assert len(g) > 0
 
 
-def test_stream_to_jdbc_sync_lands_rows_in_real_db(spark, events_dir, tmp_path):
-    """Streaming tail of the sync contract, wire-tested: events stream →
-    foreachBatch → JDBC staging write into embedded Derby → publish SQL
-    handed to the executor with staging already queryable."""
-    from dask_felleskomponenter_spark.sources.files import read_jdbc
-    from dask_felleskomponenter_spark.streaming.ops import (
-        stream_events,
-        stream_to_jdbc_sync,
-    )
-    from dask_felleskomponenter_spark.sync import (
-        PostgresSyncManager,
-        PostgresTargetConfig,
-    )
-
-    url = f"jdbc:derby:{tmp_path}/streamdb;create=true"
-    cfg = PostgresTargetConfig(
-        host="unused.invalid",
-        dbname="unused",
-        user="app",
-        password="app",
-        staging_table="staging_events",
-        target_table="target_events",
-        extra_jdbc_options={
-            "url": url,
-            "driver": "org.apache.derby.jdbc.EmbeddedDriver",
-        },
-    )
-    staged_counts: list[int] = []
-
-    def executor(sql: str) -> int:
-        from dask_felleskomponenter_spark.sync.postgres import quote_ident
-
-        # quoted, matching _write_to_staging's exact-case relation name
-        # (Derby folds an unquoted read-back to uppercase)
-        n = read_jdbc(
-            spark, url, quote_ident(cfg.staging_table),
-            driver=cfg.extra_jdbc_options["driver"],
-        ).count()
-        staged_counts.append(n)
-        assert "TRUNCATE TABLE" in sql
-        return n
-
-    mgr = PostgresSyncManager(cfg, sql_executor=executor)
-    ev = stream_events(spark, events_dir).select("event_id", "user_id", "value")
-    # snapshot publish is TRUNCATE+load per batch: an explicit opt-in
-    # (only safe because this bounded source yields a single batch)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="snapshot"):
-        stream_to_jdbc_sync(
-            ev, mgr, str(tmp_path / "ckpt_denied"), mode="snapshot"
-        )
-    mgr.allow_streaming_snapshot = True
-    q = stream_to_jdbc_sync(ev, mgr, str(tmp_path / "ckpt"), mode="snapshot")
-    q.awaitTermination()
-
-    expected = spark.read.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(events_dir).count()
-    # staging held every row of its batch at publish time
-    assert sum(staged_counts) == expected and staged_counts
-
-
-def test_stream_static_dim_join_matches_batch(spark, events_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from dask_felleskomponenter_spark.sources import load_table
-    from dask_felleskomponenter_spark.streaming.ops import (
-        run_to_memory_sink,
-        stream_events,
-        stream_static_dim_join,
-    )
-
-    dim = (
-        load_table(spark, "/root/testdata/sf0.001", "customer")
-        .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
-    )
-    ev = stream_events(spark, events_dir).select("event_id", "user_id")
-    out = run_to_memory_sink(
-        stream_static_dim_join(ev, dim, on=["user_id"]),
-        "dimjoin",
-        str(tmp_path / "ck"),
-    )
-    got = sorted(tuple(r) for r in out.collect())
-
-    batch_ev = spark.read.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(events_dir).select("event_id", "user_id")
-    want = sorted(tuple(r) for r in batch_ev.join(dim, ["user_id"]).collect())
-    assert got == want and got
-
-
-def test_stream_jdbc_sync_checkpoint_replay_is_idempotent(spark, events_dir, tmp_path):
-    """Restarting the sink on the same checkpoint with no new data must
-    publish NOTHING — offsets are committed, so at-least-once batch
-    delivery plus idempotent publish = effectively exactly-once."""
-    from dask_felleskomponenter_spark.streaming.ops import (
-        stream_events,
-        stream_to_jdbc_sync,
-    )
-    from dask_felleskomponenter_spark.sync import (
-        PostgresSyncManager,
-        PostgresTargetConfig,
-    )
-
-    url = f"jdbc:derby:{tmp_path}/replaydb;create=true"
-    cfg = PostgresTargetConfig(
-        host="unused.invalid", dbname="u", user="app", password="app",
-        staging_table="staging_replay", target_table="target_replay",
-        extra_jdbc_options={
-            "url": url, "driver": "org.apache.derby.jdbc.EmbeddedDriver",
-        },
-    )
-    publishes = []
-    mgr = PostgresSyncManager(cfg, sql_executor=lambda sql: publishes.append(sql) or 0)
-    mgr.allow_streaming_snapshot = True  # bounded single-batch source
-    ckpt = str(tmp_path / "ck")
-
-    ev = stream_events(spark, events_dir).select("event_id", "user_id")
-    stream_to_jdbc_sync(ev, mgr, ckpt, mode="snapshot").awaitTermination()
-    n_first = len(publishes)
-    assert n_first >= 1
-
-    # same checkpoint, same source, no new files -> zero new publishes
-    ev2 = stream_events(spark, events_dir).select("event_id", "user_id")
-    stream_to_jdbc_sync(ev2, mgr, ckpt, mode="snapshot").awaitTermination()
-    assert len(publishes) == n_first
-
-
 def test_watermark_drops_late_rows_across_restarts(spark, tmp_path):
     """The late-data contract, actually exercised: a second availableNow
     run on the same checkpoint carries a row OLDER than the committed
@@ -463,49 +305,6 @@ def test_watermark_drops_late_rows_across_restarts(spark, tmp_path):
     assert second.get((11, "click")) == 1
     assert second.get((12, "click")) == 1
     assert (10, "click") not in second  # finalized windows emit exactly once
-
-
-def test_python_stream_source_is_deterministic_and_bounded(spark, tmp_path):
-    """Spark 4 streaming Python DataSource: the synthetic corpus as a
-    micro-batch stream. availableNow must drain exactly max_batches
-    batches (bounded latestOffset), and a second run must produce
-    byte-identical rows (deterministic (seed, batch, partition, row)
-    generation — the replay property exactly-once sinks rely on)."""
-    from dask_felleskomponenter_spark.sources.synthetic import (
-        register_synthetic_sources,
-    )
-
-    register_synthetic_sources(spark)
-
-    def run_once(name):
-        stream = (
-            spark.readStream.format("synthetic_documents")
-            .option("n_partitions", 3)
-            .option("rows_per_partition", 20)
-            .option("seed", 11)
-            .option("max_batches", 2)
-            .load()
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", str(tmp_path / f"ckpt_{name}")
-            )
-            .start()
-        )
-        q.awaitTermination(120)
-        return sorted(
-            tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
-
-    first = run_once("syn_stream_a")
-    second = run_once("syn_stream_b")
-    assert len(first) == 2 * 3 * 20
-    assert first == second
-    ids = [r[0] for r in first]
-    assert ids == sorted(set(ids)), "doc_ids must be unique and dense-ordered"
 
 
 def test_streaming_foreachbatch_maintains_incremental_summary(spark, tmp_path):
